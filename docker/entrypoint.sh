@@ -12,6 +12,10 @@ for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.refl
          java.base/sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
 done
+# Spark's local dir (shuffle, cache spill) lives under the graft scratch
+# root, which defaults to /dev/shm: a container's is 64 MiB unless
+# shm_size says otherwise, too small for an ingest shuffle. Keep it on disk.
+export GRAFT_FIXTURE_DIR="${GRAFT_FIXTURE_DIR:-/tmp}"
 MAIN=graft.serve.ServeMain
 [ "${GRAFT_MODE:-serve}" = ingest ] && MAIN=graft.serve.IngestMain
 exec java $ADD_OPENS -Xmx"${GRAFT_MEM:-4g}" \

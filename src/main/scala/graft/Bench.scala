@@ -46,24 +46,25 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Copy the sf directory's parquet files into tmpfs. Best-effort: any
-    * failure (no /dev/shm, out of space) falls back to the original dir —
-    * staging is a measurement-hygiene optimization, never a correctness
-    * dependency. Re-entrant: files already staged with matching length
-    * AND no-older mtime are not recopied (length alone kept a stale copy
-    * alive when testdata was regenerated at identical byte size — round-4
-    * advice); any recopy also invalidates the derived widened table so
+  /** Copy the sf directory's parquet files under the scratch root
+    * (tmpfs by default). Best-effort: any failure (no root, out of
+    * space) falls back to the original dir — staging is a
+    * measurement-hygiene optimization, never a correctness dependency.
+    * Re-entrant: files already staged with matching length AND no-older
+    * mtime are not recopied (length alone kept a stale copy alive when
+    * testdata was regenerated at identical byte size — round-4 advice);
+    * any recopy also invalidates the derived widened table so
     * prepareWidened regenerates it from the fresh inputs.
     */
   private def stageInputs(sfDir: String): (String, Boolean) = {
     try {
       val src = new java.io.File(sfDir)
-      val shm = new java.io.File("/dev/shm")
-      if (!src.isDirectory || !shm.isDirectory) return (sfDir, false)
+      val root = new java.io.File(Scratch.root)
+      if (!src.isDirectory || !root.isDirectory) return (sfDir, false)
       val files = src.listFiles().filter(_.isFile)
       val need = files.map(_.length).sum
-      if (shm.getUsableSpace < 4 * need) return (sfDir, false) // 4x: widened table + slack
-      val dst = new java.io.File(shm, s"graft-bench-input/${src.getName}")
+      if (root.getUsableSpace < 4 * need) return (sfDir, false) // 4x: widened table + slack
+      val dst = new java.io.File(Scratch.path("bench_input", sfDir))
       dst.mkdirs()
       var recopied = false
       for (f <- files) {
@@ -81,11 +82,7 @@ object Bench {
           // nested dir (e.g. a _temporary left by a crashed write), which
           // left the stale dir behind and silently flipped benchOnly to
           // the inline-widening fallback (round-5 advice)
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-            f.delete(): Unit
-          }
-          rm(widenedDir)
+          Scratch.remove(widenedDir)
           if (widenedDir.exists)
             System.err.println(
               s"[bench] widened-table invalidation incomplete: $widenedDir")
@@ -245,19 +242,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDirEnv = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // this box's root disk stalls intermittently (30-100x hiccups on
-      // shuffle spill); tmpfs shuffle dirs make timings reflect the plans
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations ++= Seq(graft.plans.SpatialFilterPushdown)
+    val spark = GraftSession.getOrCreate()
 
     val (sfDir, staged) = stageInputs(sfDirEnv)
     if (staged) prepareWidened(spark, sfDir)

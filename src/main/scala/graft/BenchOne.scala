@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query timing harness for local iteration: the same session
   * config and noop-sink methodology as [[Bench]], but one named query,
   * N warm repetitions, per-rep seconds on stdout. Not part of the driver
-  * contract — `Bench` remains the measured record.
+  * contract — `Bench` remains the measured record. A query that fails
+  * (or is not a known name) is reported and skipped; the rest still run.
+  * With reps=1 it is the spot-timing main for scale evidence runs
+  * (the sf10/g100x sections of CORRECTNESS_SF1.md / BASELINE.md).
   *
   * Usage: runMain graft.BenchOne <sfDir> <name[,name...]> [reps=5]
   */
@@ -14,17 +15,7 @@ object BenchOne {
     val sfDir = args(0)
     val qnames = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 2) args(2).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations ++= Seq(graft.plans.SpatialFilterPushdown)
+    val spark = GraftSession.getOrCreate()
     val qmap = SparkEntry.queries ++ SparkEntry.benchOnly
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
@@ -34,7 +25,7 @@ object BenchOne {
     def gcMillis(): Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala
       .map(_.getCollectionTime).filter(_ >= 0).sum
-    for (name <- qnames) {
+    for (name <- qnames) try {
       val fn = qmap(name)
       val times = (1 to reps).map { i =>
         val gc0 = gcMillis()
@@ -52,6 +43,8 @@ object BenchOne {
         t
       }
       println(f"[benchone] $name min of $reps: ${times.min}%.3f s")
+    } catch {
+      case e: Exception => println(s"[benchone] $name FAILED: ${e.getMessage}")
     }
     spark.stop()
   }

@@ -33,23 +33,8 @@ object SpatialSkipBench {
 
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 4000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations ++= Seq(graft.plans.SpatialFilterPushdown)
-
-    val records = new LongAdder; val bytes = new LongAdder
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val im = t.taskMetrics.inputMetrics
-        records.add(im.recordsRead); bytes.add(im.bytesRead)
-      }
-    })
+    val spark = GraftSession.getOrCreate()
+    val meter = new InputMeter(spark)
 
     // the s1 synthetic point cloud: neighbors by id are FAR apart
     // spatially, so a hash layout has full-extent row groups
@@ -58,33 +43,17 @@ object SpatialSkipBench {
       (col("id") * 7 % 360 - 180 + (col("id") % 25) / 100.0).as("x"),
       (col("id") * 3 % 180 - 90 + (col("id") % 25) / 100.0).as("y"))
 
-    val zPath = "/dev/shm/graft_skip_z"
-    val hPath = "/dev/shm/graft_skip_h"
+    val zPath = Scratch.dir("skip_z")
+    val hPath = Scratch.dir("skip_h")
     graft.sources.SpatialLayout.write(pts, col("x"), col("y"), 64, zPath)
     pts.repartition(64, col("c_custkey")).write.mode("overwrite").parquet(hPath)
 
-    def runOnce(path: String): (Long, Long, Long, Long) = {
-      records.reset(); bytes.reset()
-      val t0 = System.nanoTime()
-      val matched = spark.read.parquet(path)
+    def runOnce(path: String): (Long, Long, Long, Long) = meter.measure(
+      spark.read.parquet(path)
         .filter(st_intersects(
           st_geomfromtext(lit("POLYGON ((-50 -20, 40 -20, 40 35, -50 35, -50 -20))")),
           st_point(col("x"), col("y"))))
-        .agg(count(lit(1))).head().getLong(0)
-      val ms = (System.nanoTime() - t0) / 1000000L
-      // listener events drain asynchronously (the bus API is
-      // private[spark]): poll until the sums hold still for three
-      // consecutive samples — a single equal pair can catch a
-      // momentarily idle bus mid-drain and under-count
-      var last = -1L
-      var stable = 0
-      while (stable < 3) {
-        val cur = records.sum()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-        Thread.sleep(300L)
-      }
-      (matched, records.sum(), bytes.sum(), ms)
-    }
+        .agg(count(lit(1))).head().getLong(0))
 
     // warm both paths once (page cache, codegen), then measure
     Seq(zPath, hPath).foreach(runOnce)
@@ -96,5 +65,40 @@ object SpatialSkipBench {
       s""""hash":{"records_read":$rh,"bytes_read":$bh,"ms":$th},""" +
       s""""records_skipped_pct":${math.round(10000.0 * (rh - rz) / rh) / 100.0}}""")
     spark.stop()
+  }
+}
+
+/** Counts what executor tasks actually READ (input metrics: records
+  * decoded, bytes pulled) — the evidence both skip benches compare
+  * across layouts.
+  */
+private[graft] final class InputMeter(spark: SparkSession) {
+  private val records = new LongAdder
+  private val bytes = new LongAdder
+  spark.sparkContext.addSparkListener(new SparkListener {
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      val im = t.taskMetrics.inputMetrics
+      records.add(im.recordsRead); bytes.add(im.bytesRead)
+    }
+  })
+
+  /** Run the counting `action`: (its count, records read, bytes read, ms). */
+  def measure(action: => Long): (Long, Long, Long, Long) = {
+    records.reset(); bytes.reset()
+    val t0 = System.nanoTime()
+    val matched = action
+    val ms = (System.nanoTime() - t0) / 1000000L
+    // listener events drain asynchronously (the bus API is
+    // private[spark]): poll until the sums hold still for three
+    // consecutive samples — a single equal pair can catch a
+    // momentarily idle bus mid-drain and under-count
+    var last = -1L
+    var stable = 0
+    while (stable < 3) {
+      val cur = records.sum()
+      if (cur == last) stable += 1 else { stable = 0; last = cur }
+      Thread.sleep(300L)
+    }
+    (matched, records.sum(), bytes.sum(), ms)
   }
 }

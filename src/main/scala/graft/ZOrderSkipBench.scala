@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement main for q45's generic Z-order layout: quantifies how
@@ -22,22 +18,8 @@ object ZOrderSkipBench {
 
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 4000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val records = new LongAdder; val bytes = new LongAdder
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val im = t.taskMetrics.inputMetrics
-        records.add(im.recordsRead); bytes.add(im.bytesRead)
-      }
-    })
+    val spark = GraftSession.getOrCreate()
+    val meter = new InputMeter(spark)
 
     // synthetic fact: two independent pseudo-random key columns, so id
     // order correlates with NEITHER (hash layout = full-extent groups)
@@ -47,9 +29,9 @@ object ZOrderSkipBench {
       (col("id") * 16807 % 50000).as("b"),
       (col("id") % 97).cast("double").as("v"))
 
-    val zPath = "/dev/shm/graft_zskip_z"
-    val aPath = "/dev/shm/graft_zskip_a"
-    val hPath = "/dev/shm/graft_zskip_h"
+    val zPath = Scratch.dir("zskip_z")
+    val aPath = Scratch.dir("zskip_a")
+    val hPath = Scratch.dir("zskip_h")
     graft.sources.ZOrderLayout.write(rows, Seq("a", "b"), bits = 6,
       numPartitions = 64, zPath)
     rows.repartitionByRange(64, col("a")).sortWithinPartitions(col("a"))
@@ -57,27 +39,12 @@ object ZOrderSkipBench {
     rows.repartition(64, col("id")).write.mode("overwrite").parquet(hPath)
 
     def runOnce(path: String, bOnly: Boolean): (Long, Long, Long, Long) = {
-      records.reset(); bytes.reset()
-      val t0 = System.nanoTime()
       // conjunctive probe (~1% on a, ~2% on b) AND the b-ONLY probe —
       // the second is where a single-column sort is helpless and the
       // curve still prunes: every clustering column gets tight stats
       val pred = if (bOnly) col("b").between(20000, 21000)
         else col("a").between(10000, 11000) && col("b").between(20000, 21000)
-      val matched = spark.read.parquet(path)
-        .filter(pred)
-        .agg(count(lit(1))).head().getLong(0)
-      val ms = (System.nanoTime() - t0) / 1000000L
-      // listener events drain asynchronously: require three consecutive
-      // stable samples (the SpatialSkipBench quiesce rule)
-      var last = -1L
-      var stable = 0
-      while (stable < 3) {
-        val cur = records.sum()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-        Thread.sleep(300L)
-      }
-      (matched, records.sum(), bytes.sum(), ms)
+      meter.measure(spark.read.parquet(path).filter(pred).agg(count(lit(1))).head().getLong(0))
     }
 
     for (b <- Seq(false, true)) Seq(zPath, aPath, hPath).foreach(runOnce(_, b)) // warm

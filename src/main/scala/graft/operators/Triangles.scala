@@ -126,22 +126,20 @@ object Triangles {
     */
   def perNodeBucketed(edges: DataFrame, srcCol: String, dstCol: String,
                       table: String, path: String,
-                      buckets: Int = 32,
-                      clusterFirst: Boolean = true): DataFrame = {
+                      buckets: Int = 32): DataFrame = {
     val spark = edges.sparkSession
     graft.sources.LayersTable.validateIdentifier(table)
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val oriented = orient(edges, srcCol, dstCol)
-    // cluster by bucket key BEFORE the bucketed write (default): without
+    // cluster by bucket key BEFORE the bucketed write: without
     // this every upstream task opens a writer per bucket it touches —
     // tasks x buckets tiny files at scale (guide §6), and at gate scale
     // the AQE-coalesced single upstream task writes ALL buckets serially.
     // With it each task holds exactly one bucket: `buckets` files, a
     // parallel write, and the downstream bucket-layout read opens one
-    // file per bucket (the q39 repartition-before-bucketBy treatment).
-    // `clusterFirst=false` keeps the old shape for A/B measurement
-    // (graft.Profile g2bforms).
-    (if (clusterFirst) oriented.repartition(buckets, col("u")) else oriented)
+    // file per bucket (the q39 repartition-before-bucketBy treatment;
+    // the clustered/unclustered A/B is in OPTIMIZATION_r20.md).
+    oriented.repartition(buckets, col("u"))
       .write
       .mode("overwrite").format("parquet")
       .bucketBy(buckets, "u").sortBy("u")

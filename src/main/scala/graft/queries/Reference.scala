@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.functions.GraftFunctions._
 import graft.operators.{Knn, Search}
 import graft.operators.Search.{Point, SearchRequest}
@@ -58,14 +58,18 @@ object Reference extends QueryPack {
 
   /** The committed GeoParquet golden fixture (real geo footer, WKB
     * Polygon geometry, 8-dim embeddings — see FIXTURES.md §A and
-    * GeoParquetSpec). Resolved from `GRAFT_FIXTURE_DIR` (the directory
-    * holding the fixture) so other checkouts can point at their own copy;
-    * defaults to this repo's test-resources path because the driver's
-    * gate and the oracle's DuckDB both run on this host.
+    * GeoParquetSpec), at its committed path in the checkout that the
+    * graft classes were loaded from (`<checkout>/target/...`), else under
+    * the working directory; absolute, as the oracle SQL embeds it.
     */
-  private val GoldenFixture: String =
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR",
-      "/root/repo/src/test/resources") + "/golden_layers.geoparquet"
+  private val GoldenFixture: String = {
+    val rel = "src/test/resources/golden_layers.geoparquet"
+    val classes = new java.io.File(
+      getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    Iterator.iterate(classes)(_.getParentFile).takeWhile(_ != null)
+      .map(new java.io.File(_, rel)).find(_.isFile)
+      .getOrElse(new java.io.File(rel)).getAbsolutePath
+  }
 
   /** The notebook replay's probe (agent.ipynb cell 3 in spirit), stated
     * in the oracle as the float32-exact double values so both engines
@@ -3428,6 +3432,8 @@ object Reference extends QueryPack {
     // point-in-rectangle is inclusive-BETWEEN over the decoded ring's
     // bbox, exact for the fixture's axis-aligned polygons (s1 precedent).
     "x2_geoparquet_search" -> { (s, d) =>
+      require(new java.io.File(GoldenFixture).isFile,
+        s"x2 needs the committed golden fixture at $GoldenFixture")
       val raw = graft.sources.LayersTable.readGeoParquet(s, GoldenFixture)
       val layers = graft.operators.Ingest.prepare(raw,
         orderCol = Some("name"), validateDim = Some(8))
@@ -3486,7 +3492,7 @@ object Reference extends QueryPack {
     // artifact contract as x4 — a trained cross-encoder export swaps in
     // without touching the execution path.
     "x8_cross_rerank" -> { (s, d) =>
-      val path = s"/dev/shm/graft_ce_${new java.io.File(d).getName}"
+      val path = Scratch.path("ce", d)
       graft.operators.NeuralEmbed.save(s,
         graft.operators.NeuralEmbed.generate(EmbedDim, CrossHidden, 1), path)
       val model = graft.operators.NeuralEmbed.load(s, path)
@@ -3512,7 +3518,7 @@ object Reference extends QueryPack {
       val vec = Knn.topK(emb, col("embedding"), probe, 20, col("vec_id"))
         .select(col("vec_id").as("id"), (-col("dist")).as("score"))
       val fused = graft.operators.Hybrid.rrf(Seq(lex, vec), k = 12)
-      val path = s"/dev/shm/graft_ce_${new java.io.File(d).getName}"
+      val path = Scratch.path("ce", d)
       graft.operators.NeuralEmbed.save(s,
         graft.operators.NeuralEmbed.generate(EmbedDim, CrossHidden, 1), path)
       val model = graft.operators.NeuralEmbed.load(s, path)
@@ -3534,7 +3540,7 @@ object Reference extends QueryPack {
     // restatement of the same forward pass.
     "x11_onnx_embed_search" -> { (s, d) =>
       import s.implicits._
-      val path = s"/dev/shm/graft_onnx_${new java.io.File(d).getName}/model.onnx"
+      val path = Scratch.path("onnx", d) + "/model.onnx"
       graft.operators.OnnxMlp.writeFile(
         graft.operators.NeuralEmbed.generate(OnnxD0, OnnxHidden, OnnxOut), path)
       val model = graft.operators.OnnxMlp.readFile(path)
@@ -3572,7 +3578,7 @@ object Reference extends QueryPack {
           .as[graft.operators.Embed.TextRow], model).toDF()
         .filter(dot_product(col("embedding"), col("embedding")) > 0)
       val idx = graft.operators.Ivf.build(emb, "id", "embedding", nlist = 8, iters = 5)
-      val path = s"/dev/shm/graft_ivf_x12_${new java.io.File(d).getName}"
+      val path = Scratch.path("ivf_x12", d)
       graft.operators.Ivf.save(idx, path)
       graft.operators.Ivf.searchSaved(s, path,
         graft.operators.NeuralEmbed.embedQuery(EmbedQuery, model),
@@ -3608,7 +3614,7 @@ object Reference extends QueryPack {
           .filter(dot_product(col("embedding"), col("embedding")) > 0)
       val emb = encode(curated.select(col("doc_id").as("id"), col("text")))
       val idx = graft.operators.Ivf.build(emb, "id", "embedding", nlist = 8, iters = 5)
-      val path = s"/dev/shm/graft_ivf_x13_${new java.io.File(d).getName}"
+      val path = Scratch.path("ivf_x13", d)
       graft.operators.Ivf.save(idx, path)
       graft.operators.Ivf.snapshotStats(s, path)
       val drifted = encode(docs
@@ -3626,7 +3632,7 @@ object Reference extends QueryPack {
 
     "x4_neural_embed_search" -> { (s, d) =>
       import s.implicits._
-      val path = s"/dev/shm/graft_nn_${new java.io.File(d).getName}"
+      val path = Scratch.path("nn", d)
       graft.operators.NeuralEmbed.save(s,
         graft.operators.NeuralEmbed.generate(EmbedDim, NeuralHidden, EmbedDim), path)
       val model = graft.operators.NeuralEmbed.load(s, path)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Scratch, Tables}
 
 /** Relational operator coverage over the TPC-H-ish synthetic tables:
   * scan, filter, projection, hash/sort aggregate, inner/semi/anti join,
@@ -741,8 +741,8 @@ object Relational extends QueryPack {
 
     // (g7's sf10-scale variant lives in `benchDefs` as g7x_capped_d100 —
     // same operator with the cap dialed for 100× node count, measured by
-    // TimeQueries for the asymptotics table, not oracle-gated because it
-    // is g7 with a different knob position.)
+    // `BenchOne <sfDir> g7x_capped_d100 1` for the asymptotics table, not
+    // oracle-gated because it is g7 with a different knob position.)
 
     // RECALL CURVE for the capped generator (the v33 nprobe-curve
     // posture): capped-generate top-200 / exact-refine top-20 vs the
@@ -855,14 +855,14 @@ object Relational extends QueryPack {
     // Crossover, re-adjudicated r20: the r19 array restructure removed
     // the orientation-subtree double-read this design existed to
     // amortize, so declarative g2 now WINS the single-query comparison —
-    // interleaved A/B (graft.Profile g2bforms) warm passes: g2 6.9-7.6 s
+    // interleaved A/B (g2bforms, OPTIMIZATION_r20.md) warm passes: g2 6.9-7.6 s
     // vs g2b 8.0-8.5 s (clustered write; 9.8-10.0 unclustered). g2b's
     // remaining premise is the one it documents for a REUSED layout:
     // the build-once cost amortizes across downstream readers (g2b's
     // read side is exchange-free), not within one query. The gate stays
     // as the priced physical-design comparison.
     "g2b_triangles_bucketed" -> { (s, d) =>
-      val path = s"/dev/shm/graft_tri_${new java.io.File(d).getName}"
+      val path = Scratch.path("tri", d)
       graft.operators.Triangles.perNodeBucketed(coPurchasePairs(s, d), "p1", "p2",
         table = "graft_tri_oriented", path = path)
         .orderBy(col("n_tri").desc, col("node").asc)
@@ -877,7 +877,7 @@ object Relational extends QueryPack {
     // the gate pins shortest-round-trip double formatting and timestamp
     // codec fidelity, not just the aggregate
     "q32_csv_roundtrip" -> { (s, d) =>
-      val path = s"/dev/shm/graft_csv_${new java.io.File(d).getName}"
+      val path = Scratch.path("csv", d)
       Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderstatus"), col("o_orderdate"))
@@ -896,7 +896,7 @@ object Relational extends QueryPack {
     // JSON-lines sink + source round-trip (same posture for the JSON
     // codec; e3 covers json PARSING, this covers the sink/source pair)
     "q33_json_roundtrip" -> { (s, d) =>
-      val path = s"/dev/shm/graft_json_${new java.io.File(d).getName}"
+      val path = Scratch.path("json", d)
       Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .write.mode("overwrite").json(path)
@@ -914,7 +914,7 @@ object Relational extends QueryPack {
     // q32/q33): the oracle states the aggregate over the ORIGINAL
     // table, so equality pins codec fidelity end to end
     "q37_orc_roundtrip" -> { (s, d) =>
-      val path = s"/dev/shm/graft_orc_${new java.io.File(d).getName}"
+      val path = Scratch.path("orc", d)
       Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"),
           col("l_shipdate"))
@@ -935,9 +935,8 @@ object Relational extends QueryPack {
     // quarter-sized one. PlanShapeSpec pins dynamicpruningexpression in
     // the fact scan's partition filters.
     "q38_dynamic_partition_pruning" -> { (s, d) =>
-      val sfx = new java.io.File(d).getName.replace('.', '_')
-      val factPath = s"/dev/shm/graft_dpp_fact_$sfx"
-      val dimPath = s"/dev/shm/graft_dpp_dim_$sfx"
+      val factPath = Scratch.path("dpp_fact", d)
+      val dimPath = Scratch.path("dpp_dim", d)
       val li = Tables.lineitem(s, d)
         .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
       li.select(col("l_quantity"), col("l_extendedprice"), col("l_discount"),
@@ -1247,18 +1246,14 @@ object Relational extends QueryPack {
     // (oracle over the ORIGINAL table); ZOrderSkipBench measures the
     // row-group skipping the layout exists for
     "q45_zorder_layout" -> { (s, d) =>
-      val path = s"/dev/shm/graft_zorder_${new java.io.File(d).getName}"
+      val path = Scratch.path("zorder", d)
       // hermetic rep: remove any previous layout FIRST so every run
       // does identical work whether or not the path exists (overwrite
       // mode deletes too, but then rep 1 and rep N time different
       // filesystem work — the r18 q45 floor-drift watch item; the
       // adjudication showed the drift is host-epoch common-mode, and
       // this removes the one query-local variance source)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(path))
+      Scratch.remove(new java.io.File(path))
       graft.sources.ZOrderLayout.write(Tables.lineitem(s, d)
           .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"),
             col("l_returnflag")),
@@ -1278,7 +1273,7 @@ object Relational extends QueryPack {
     // At 100 TB this is how a lake actually grows: columns appear over
     // time, history is never rewritten.
     "q44_schema_evolution" -> { (s, d) =>
-      val base = s"/dev/shm/graft_evo_${new java.io.File(d).getName}"
+      val base = Scratch.path("evo", d)
       val o = Tables.orders(s, d)
       o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.functions.TextFunctions._
 import graft.operators.Dedup
 
@@ -304,7 +304,7 @@ object Text extends QueryPack {
     // hash-bucketed by term for directory pruning, doclens + stats
     // sidecars): must select the identical ids as t18's from-scratch pass
     "t28_inverted_search" -> { (s, d) =>
-      val path = s"/dev/shm/graft_invidx_${new java.io.File(d).getName}"
+      val path = Scratch.path("invidx", d)
       graft.operators.InvertedIndex.save(Tables.documents(s, d),
         "doc_id", "text", path, buckets = 16)
       graft.operators.InvertedIndex.searchSaved(s, path,
@@ -323,7 +323,7 @@ object Text extends QueryPack {
     // mechanics are spec-pinned (filesystem facts DuckDB cannot state).
     "t52_index_compaction" -> { (s, d) =>
       val docs = Tables.documents(s, d)
-      val path = s"/dev/shm/graft_invidx_c_${new java.io.File(d).getName}"
+      val path = Scratch.path("invidx_c", d)
       graft.operators.InvertedIndex.save(
         docs.filter(pmod(col("doc_id"), lit(3)) === 0),
         "doc_id", "text", path, buckets = 8)
@@ -1258,8 +1258,8 @@ object Text extends QueryPack {
       // consumers (the n_exact aggregate and the hit semi-join) re-run
       // only a few-hundred-row scan — the r19 caller-level
       // localCheckpoint on top re-materialized the orderBy for nothing
-      // (one extra job; the r20 interleaved A/B `graft.Profile
-      // recallforms` measured NO-OUTER faster in every warm pass:
+      // (one extra job; the r20 interleaved A/B `recallforms` in
+      // OPTIMIZATION_r20.md measured NO-OUTER faster in every warm pass:
       // 5.36/4.69/4.48 vs 6.36/5.61/4.65 s). The LSH side also exits
       // minhashLshNearDupPairs localCheckpoint'ed.
       val exact = Dedup.jaccardNearDupPairs(docs, "doc_id", "text",

@@ -4,10 +4,13 @@ import java.io.{BufferedReader, InputStream, InputStreamReader, OutputStream, Pr
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.util.control.NonFatal
+
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.DataFrame
 
 import graft.operators.Search
+import graft.serve.SearchServer.reply
 
 /** The reference's MCP surface (`backend/mcp.py`): one `gis_layer_search`
   * tool whose result is the /search envelope with every string passed
@@ -112,6 +115,10 @@ final class McpServer(layers: DataFrame, encoder: String => Array[Float]) {
           "content" -> JArr(Vector(JObj.of(
             "type" -> JStr("text"), "text" -> JStr(e.getMessage)))),
           "isError" -> JBool(true)))
+      // anything else (e.g. a throwing encoder) is the JSON-RPC internal
+      // error, still a reply rather than a dropped connection
+      case NonFatal(e) =>
+        error(id, -32603, s"internal error: ${e.getClass.getName}: ${e.getMessage}")
     }
   }
 
@@ -145,32 +152,20 @@ final class McpServer(layers: DataFrame, encoder: String => Array[Float]) {
           if (ex.getRequestMethod != "POST") {
             reply(ex, 405, Some(error(JNull, -32600,
               "streamable-http: POST JSON-RPC messages to this endpoint")))
-          } else if (ex.getRequestHeaders.getFirst("Content-Length") match {
-            case null => false
-            case cl => try cl.toLong > McpServer.MaxBodyBytes catch { case _: NumberFormatException => false }
-          }) {
-            // bound the body read BEFORE buffering — an oversized POST must
-            // not exhaust the serving JVM's heap (shared with Spark)
-            reply(ex, 413, Some(error(JNull, -32600,
-              s"request body exceeds ${McpServer.MaxBodyBytes} bytes")))
-          } else {
-            // chunked / unlabelled bodies get the same cap, enforced on read
-            val raw = ex.getRequestBody.readNBytes(McpServer.MaxBodyBytes + 1)
-            if (raw.length > McpServer.MaxBodyBytes) {
-              reply(ex, 413, Some(error(JNull, -32600,
-                s"request body exceeds ${McpServer.MaxBodyBytes} bytes")))
-            } else {
-            val body = new String(raw, UTF_8)
-            val resp =
-              try McpServer.this.handle(Json.parse(body))
-              catch { case e: JsonParseException =>
-                Some(error(JNull, -32700, s"parse error: ${e.getMessage}")) }
-            // a notification gets NO body — 202 per the MCP spec
-            resp match {
-              case Some(r) => reply(ex, 200, Some(r))
-              case None => reply(ex, 202, None)
-            }
-            }
+          } else SearchServer.readBody(ex) match {
+            // an oversized POST must not exhaust the serving JVM's heap
+            // (shared with Spark)
+            case None => reply(ex, 413, Some(error(JNull, -32600, SearchServer.TooLarge)))
+            case Some(raw) =>
+              val resp =
+                try McpServer.this.handle(Json.parse(new String(raw, UTF_8)))
+                catch { case e: JsonParseException =>
+                  Some(error(JNull, -32700, s"parse error: ${e.getMessage}")) }
+              // a notification gets NO body — 202 per the MCP spec
+              resp match {
+                case Some(r) => reply(ex, 200, Some(r))
+                case None => reply(ex, 202, None)
+              }
           }
         } finally ex.close()
     })
@@ -178,16 +173,6 @@ final class McpServer(layers: DataFrame, encoder: String => Array[Float]) {
     server.start()
     server
   }
-
-  private def reply(ex: HttpExchange, status: Int, body: Option[JValue]): Unit =
-    body match {
-      case Some(b) =>
-        val bytes = b.render.getBytes(UTF_8)
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        ex.sendResponseHeaders(status, bytes.length.toLong)
-        ex.getResponseBody.write(bytes)
-      case None => ex.sendResponseHeaders(status, -1L)
-    }
 
   /** Serve line-delimited JSON-RPC until EOF (the MCP stdio transport). */
   def serve(in: InputStream, out: OutputStream): Unit = {
@@ -205,12 +190,4 @@ final class McpServer(layers: DataFrame, encoder: String => Array[Float]) {
       line = reader.readLine()
     }
   }
-}
-
-object McpServer {
-  /** Hard cap on a streamable-http POST body (4 MiB) — far above any
-    * legitimate JSON-RPC tool call, far below anything that could
-    * pressure the shared serving JVM's heap.
-    */
-  val MaxBodyBytes: Int = 4 * 1024 * 1024
 }

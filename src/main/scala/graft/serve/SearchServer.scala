@@ -3,6 +3,8 @@ package graft.serve
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.util.control.NonFatal
+
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.DataFrame
 
@@ -24,6 +26,9 @@ import graft.operators.Search.{Point, SearchRequest}
   *    encoder (the F8 seam, `backend/app.py:28-33`);
   *  - execution errors are HTTP 200 with {"layers": null, "error": msg}
   *    (the reference catches engine errors into the envelope);
+  *  - a body over [[MaxBodyBytes]] is HTTP 413, and any other failure
+  *    (e.g. a throwing encoder) is HTTP 500, both with a {"detail"} body
+  *    — never a dropped connection;
   *  - success is HTTP 200 {"layers":[{id,name,type,description,url,
   *    metadata_text}...], "error": null}.
   *
@@ -34,6 +39,38 @@ import graft.operators.Search.{Point, SearchRequest}
   * thread-safe on a shared session).
   */
 object SearchServer {
+
+  /** Hard cap on a POST body, on both endpoints (4 MiB) — far above any
+    * legitimate search request or JSON-RPC tool call, far below anything
+    * that could pressure the shared serving JVM's heap.
+    */
+  val MaxBodyBytes: Int = 4 * 1024 * 1024
+
+  /** The request body, or None when it exceeds [[MaxBodyBytes]]. A
+    * declared Content-Length over the cap refuses before any byte is
+    * buffered; chunked or unlabelled bodies get the same cap on read.
+    * A refused body is then read and DISCARDED, up to another cap's
+    * worth: closing a socket with unread input resets it, and the client
+    * would see the reset instead of the 413.
+    */
+  private[serve] def readBody(ex: HttpExchange): Option[Array[Byte]] = {
+    val in = ex.getRequestBody
+    val declared = Option(ex.getRequestHeaders.getFirst("Content-Length"))
+      .flatMap(_.trim.toLongOption)
+    val body =
+      if (declared.exists(_ > MaxBodyBytes)) None
+      else Some(in.readNBytes(MaxBodyBytes + 1)).filter(_.length <= MaxBodyBytes)
+    if (body.isEmpty) {
+      val buf = new Array[Byte](64 * 1024)
+      var left = MaxBodyBytes
+      var n = 0
+      while (left > 0 && { n = in.read(buf, 0, math.min(buf.length, left)); n > 0 })
+        left -= n
+    }
+    body
+  }
+
+  private[serve] val TooLarge = s"request body exceeds $MaxBodyBytes bytes"
 
   /** Pydantic-analogue request decode: wrong types, missing fields, and
     * constraint violations all become [[JsonParseException]] →  422. */
@@ -125,19 +162,23 @@ object SearchServer {
       override def handle(ex: HttpExchange): Unit =
         try {
           if (ex.getRequestMethod != "POST") {
-            reply(ex, 405, JObj.of("detail" -> JStr("method not allowed")))
+            reply(ex, 405, Some(JObj.of("detail" -> JStr("method not allowed"))))
           } else {
-            val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-            val resp: (Int, JValue) =
-              try {
-                val req = decodeRequest(Json.parse(body), encoder)
-                Search.validate(req) // 422 analogue, like the decode
-                (200, encodeResponse(Search.search(layers, req)))
-              } catch {
-                case e: JsonParseException => (422, detail(e.getMessage))
-                case e: IllegalArgumentException => (422, detail(e.getMessage))
-              }
-            reply(ex, resp._1, resp._2)
+            val (status, resp) = readBody(ex) match {
+              case None => (413, detail(TooLarge))
+              case Some(raw) =>
+                try {
+                  val req = decodeRequest(Json.parse(new String(raw, UTF_8)), encoder)
+                  Search.validate(req) // 422 analogue, like the decode
+                  (200, encodeResponse(Search.search(layers, req)))
+                } catch {
+                  case e: JsonParseException => (422, detail(e.getMessage))
+                  case e: IllegalArgumentException => (422, detail(e.getMessage))
+                  case NonFatal(e) =>
+                    (500, detail(s"internal error: ${e.getClass.getName}: ${e.getMessage}"))
+                }
+            }
+            reply(ex, status, Some(resp))
           }
         } finally ex.close()
     })
@@ -149,10 +190,14 @@ object SearchServer {
   private def detail(msg: String): JObj =
     JObj.of("detail" -> JArr(Vector(JObj.of("msg" -> JStr(msg)))))
 
-  private def reply(ex: HttpExchange, status: Int, body: JValue): Unit = {
-    val bytes = body.render.getBytes(UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(status, bytes.length.toLong)
-    ex.getResponseBody.write(bytes)
-  }
+  /** Send `status` with a JSON body, or with no body at all. */
+  private[serve] def reply(ex: HttpExchange, status: Int, body: Option[JValue]): Unit =
+    body match {
+      case Some(b) =>
+        val bytes = b.render.getBytes(UTF_8)
+        ex.getResponseHeaders.set("Content-Type", "application/json")
+        ex.sendResponseHeaders(status, bytes.length.toLong)
+        ex.getResponseBody.write(bytes)
+      case None => ex.sendResponseHeaders(status, -1L)
+    }
 }

@@ -53,14 +53,7 @@ object ServeMain {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
       "usage: ServeMain <layersParquet> [httpPort=8080] [mcpPort=8081] [weightsPath]")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    start(spark, args(0),
+    start(graft.GraftSession.getOrCreate(), args(0),
       if (args.length > 1) args(1).toInt else 8080,
       if (args.length > 2) args(2).toInt else 8081,
       if (args.length > 3) Some(args(3)) else None)

@@ -21,10 +21,10 @@ import graft.Tables
   * AS a binary column in parquet (the m-family contract, SURVEY §2.9
   * multimodal rows); nobody re-renders JPEGs per query.
   *
-  * Freshness: the sidecar is keyed by the sf-dir basename and rebuilt
+  * Freshness: the sidecar is keyed by the sf dir (`Scratch.path`) and rebuilt
   * when the source `documents.parquet` is newer than the sidecar's
   * `_SUCCESS` marker (the Bench widened-table posture). Any write
-  * failure (read-only host, no /dev/shm) degrades to inline synthesis —
+  * failure (read-only host, no scratch root) degrades to inline synthesis —
   * the fixture is measurement hygiene, never a correctness dependency.
   */
 object BmpFixture {
@@ -85,17 +85,12 @@ object BmpFixture {
 
   /** The blob table, served from the materialized sidecar (built on
     * first use per dataset, invalidated when the source fingerprint
-    * changes). The cache dir is keyed by a hash of the CANONICAL dataset
-    * path — two datasets whose directories share a basename get separate
-    * sidecars under the shared /dev/shm root.
+    * changes). The cache dir is [[graft.Scratch.path]], keyed by the
+    * canonical dataset path — two datasets whose directories share a
+    * basename get separate sidecars.
     */
   def blobs(s: SparkSession, d: String): DataFrame = {
-    val base = sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/dev/shm")
-    val canon = new java.io.File(d).getCanonicalPath
-    val pathKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(canon.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    val dir = new java.io.File(base,
-      s"graft_bmp_${new java.io.File(d).getName}_$pathKey")
+    val dir = new java.io.File(graft.Scratch.path("bmp", d))
     val success = new java.io.File(dir, "_SUCCESS")
     val fpFile = new java.io.File(dir, "_SRC_FP")
     val src = new java.io.File(d, "documents.parquet")

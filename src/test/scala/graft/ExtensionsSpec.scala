@@ -9,22 +9,9 @@ import graft.plans.SpatialFilterPushdown
 
 class ExtensionsSpec extends AnyFunSuite {
 
-  // separate session: extensions are builder-time configuration, and
-  // getOrCreate() would silently return the shared test session (ignoring
-  // withExtensions) unless the default/active slots are cleared first.
-  // The new session shares the existing SparkContext.
-  lazy val extSpark: SparkSession = {
-    val base = SparkTestSession.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .config("spark.sql.shuffle.partitions", "2")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    SparkSession.setDefaultSession(base)
-    SparkSession.setActiveSession(base)
-    s
-  }
+  // the entry points' session, from GraftSession, which installs the
+  // extensions these tests exercise
+  lazy val extSpark: SparkSession = GraftTestSession.spark
 
   test("extension-registered functions work from pure SQL") {
     val d = extSpark.sql(

@@ -144,6 +144,34 @@ class ServeSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  test("http: oversized bodies refuse with 413 before buffering") {
+    withServer { (c, port) =>
+      val pad = "x" * (SearchServer.MaxBodyBytes + 1024)
+      val r = post(c, port, s"""{"request_string":"$pad"}""")
+      assert(r.statusCode === 413)
+      val JObj(fs) = Json.parse(r.body()): @unchecked
+      assert(fs("detail").render.contains("request body exceeds"))
+    }
+  }
+
+  test("http: an unexpected failure is a 500 envelope, not a dropped connection") {
+    val boom: String => Array[Float] = _ => throw new IllegalStateException("encoder down")
+    val server = SearchServer.start(layers, boom, port = 0)
+    try {
+      val r = post(HttpClient.newHttpClient(), server.getAddress.getPort,
+        """{"request_string":"red"}""")
+      assert(r.statusCode() === 500)
+      val JObj(fs) = Json.parse(r.body()): @unchecked
+      assert(fs("detail").render.contains("encoder down"))
+    } finally server.stop(0)
+    // the MCP tool answers the same failure with a JSON-RPC internal error
+    val err = rpc(new McpServer(layers, boom),
+      """{"jsonrpc":"2.0","id":7,"method":"tools/call","params":{
+        |"name":"gis_layer_search","arguments":{"request_string":"red"}}}""".stripMargin)
+    assert(err.fields("id") === JNum("7"))
+    assert(err.fields("error").render.contains("-32603"))
+  }
+
   test("http: concurrent requests share the session safely (bounded pool)") {
     withServer { (c, port) =>
       import scala.concurrent.{Await, Future}
@@ -347,7 +375,7 @@ class ServeSpec extends AnyFunSuite {
 
   test("mcp http: oversized bodies refuse with 413 before buffering") {
     withMcpHttp { (client, port) =>
-      val pad = "x" * (McpServer.MaxBodyBytes + 1024)
+      val pad = "x" * (SearchServer.MaxBodyBytes + 1024)
       val r = postMcp(client, port,
         s"""{"jsonrpc":"2.0","id":1,"method":"tools/list","params":{"pad":"$pad"}}""")
       assert(r.statusCode === 413)

@@ -16,7 +16,7 @@ object SparkTestSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.local.dir", "/dev/shm/graft-spark")
+      .config("spark.local.dir", Scratch.dir("spark"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
@@ -1184,7 +1184,7 @@ class VectorSpec extends AnyFunSuite {
     val e = Tables.embeddings(spark, sfDir)
     val idx = graft.operators.Ivf.build(e, "vec_id", "embedding", nlist = 8, iters = 5)
     val model = graft.operators.Pq.train(e, "vec_id", "embedding", m = 4, k = 8, iters = 3)
-    val path = "/dev/shm/graft_ivfpq_refine_spec"
+    val path = Scratch.dir("ivfpq_refine_spec")
     graft.operators.IvfPq.save(idx, model, path)
     val probe = e.filter(col("vec_id") === 2L)
       .select(col("embedding")).head().getSeq[Float](0).toArray

@@ -33,6 +33,9 @@ set -euo pipefail
 HERE="\$(cd "\$(dirname "\$0")/.." && pwd)"
 SPARK_JARS="\${SPARK_JARS:-/opt/spark/jars}"
 [ -d "\$SPARK_JARS" ] || { echo "SPARK_JARS=\$SPARK_JARS not found (point it at a Spark 4.x jars dir)" >&2; exit 2; }
+# Spark's local dir (shuffle, cache spill) goes under the graft scratch
+# root; keep it on disk rather than the default /dev/shm.
+export GRAFT_FIXTURE_DIR="\${GRAFT_FIXTURE_DIR:-\${TMPDIR:-/tmp}}"
 ADD_OPENS=""
 for p in $OPENS; do ADD_OPENS="\$ADD_OPENS --add-opens \$p=ALL-UNNAMED"; done
 exec java \$ADD_OPENS -Xmx"\${GRAFT_MEM:-4g}" \\
